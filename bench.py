@@ -762,13 +762,56 @@ def scaling_main() -> None:
     )
 
 
+def force(value) -> None:
+    """Materialize a staged value: ``.count()`` a DataFrame, or each
+    DataFrame member of a tuple (lazy localCheckpoints are cut at the
+    checkpoint RDD, so the count computes the whole staged plan). Paths
+    and driver-side values are already built."""
+    from pyspark.sql import DataFrame
+
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            v.count()
+
+
+def chunk_lines(steady: dict[str, float], fields: dict, limit: int = 1900):
+    """The steady per-query map as self-contained JSON lines of at most
+    ``limit`` chars each: every key is appended only after measuring the
+    exact line that would be printed (compact separators, wrapper fields
+    included; part/parts measured at their widest, len(steady))."""
+
+    def line(part: int, parts: int, queries: dict) -> str:
+        return json.dumps(
+            {
+                "metric": "per_query_steady",
+                "part": part,
+                "parts": parts,
+                **fields,
+                "queries": queries,
+            },
+            separators=(",", ":"),
+        )
+
+    n = len(steady)
+    chunks: list[dict[str, float]] = [{}]
+    for k, v in sorted(steady.items()):
+        if chunks[-1] and len(line(n, n, {**chunks[-1], k: v})) > limit:
+            chunks.append({})
+        chunks[-1][k] = v
+    return [line(i + 1, len(chunks), ch) for i, ch in enumerate(chunks)]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
     from data_ingestion_din_spark.plans import QUERIES
-    from data_ingestion_din_spark.session import get_spark
+    from data_ingestion_din_spark.session import get_spark, graft_cpus
+
+    # parsed once, up front: a malformed SPARK_GRAFT_CPUS fails here,
+    # not after the whole run
+    cpus = graft_cpus()
 
     unknown = [n for n in BENCH_QUERIES if n not in QUERIES]
     if unknown:
@@ -800,213 +843,17 @@ def main() -> None:
     # resolution — and each stage's cost is RECORDED as its own bench
     # row ("setup" in the full record / BENCH_DETAIL.json) so the
     # pre-staging cannot silently understate the consumers' standalone
-    # cost across rounds (ADVICE r8).
+    # cost across rounds (ADVICE r8). The rows come from the @staged
+    # registry, so every staged artifact is priced and none can hide its
+    # build inside a consumer's cold run.
+    from data_ingestion_din_spark.staging import setup_rows
+
     setup: dict[str, float] = {}
-
-    def stage(name: str, fn) -> None:
+    for row, fn, calls in setup_rows():
         t0 = time.time()
-        fn()
-        setup[name] = round(time.time() - t0, 3)
-
-    # derived entity tables (staged-table production shape)
-    from data_ingestion_din_spark.sources.entities import table_blocks, text_blocks
-
-    stage("entity_tables", lambda: (
-        text_blocks(spark, sf_dir).count(),
-        table_blocks(spark, sf_dir).count(),
-    ))
-    # bucketed fact layout: paid once (like a nightly table layout), so
-    # q3_bucketed_colocated times the zero-shuffle join, not the write
-    from data_ingestion_din_spark.operators.colocate import (
-        bucketed_fact_tables,
-        partitioned_documents,
-        zordered_events,
-    )
-
-    stage("bucketed_fact_tables", lambda: bucketed_fact_tables(spark, sf_dir))
-    # lang-partitioned corpus layout (corpus_lang_pruned_stats scans it)
-    stage("partitioned_documents", lambda: partitioned_documents(spark, sf_dir))
-    # z-ordered events layout (events_zorder_box scans it)
-    stage("zordered_events", lambda: zordered_events(spark, sf_dir))
-    # training-shard export: one-time sink cost (like a nightly export),
-    # so training_shard_manifest times the audit, not the write
-    from data_ingestion_din_spark.plans.curation_queries import (
-        _shard_export,
-        _tsi_export,
-    )
-
-    stage("shard_export", lambda: _shard_export(spark, sf_dir))
-    # incremental shard export: initial + append passes staged once, so
-    # training_shard_incremental times the read-back audit
-    stage("tsi_export", lambda: _tsi_export(spark, sf_dir))
-    # staged pHash table: the once-per-session Arrow stage (like the
-    # layouts above), so media_phash_clusters times CC resolution, not
-    # the whole-corpus hash pass it happened to consume first
-    from data_ingestion_din_spark.plans.multimodal_queries import _phash_table
-
-    stage("phash_table", lambda: _phash_table(spark, sf_dir).count())
-    # staged near-dup pair table: four dedup queries consume the same
-    # verified MinHash-banded pairs (a first-class pipeline artifact),
-    # so each times its own resolution step, not the shared pipeline
-    from data_ingestion_din_spark.plans.dedup_queries import (
-        _banded_pairs,
-        _substring_spans,
-    )
-
-    stage("banded_pairs", lambda: _banded_pairs(spark, sf_dir).count())
-    # staged duplicated-span table (three substring-dedup consumers)
-    stage("substring_spans", lambda: _substring_spans(spark, sf_dir).count())
-    # staged PQ indexes (raw + residual spaces; seven consumers between
-    # the pq/ivfpq families and their recall audits)
-    from data_ingestion_din_spark.plans.similarity_queries import _pq_trained
-
-    stage("pq_index_raw", lambda: _pq_trained(spark, sf_dir, "raw")[0].count())
-    stage("pq_index_res", lambda: _pq_trained(spark, sf_dir, "res")[0].count())
-    # k=16 codebooks + the shared exact-topk side (the operating-grid
-    # query's one-time training/staging, like the k=4 rows above)
-    from data_ingestion_din_spark.plans.similarity_queries import (
-        _etop_staged,
-        _GRID_K,
-    )
-
-    stage("pq_index_raw16", lambda: _pq_trained(spark, sf_dir, "raw", k=_GRID_K)[0].count())
-    stage("pq_index_res16", lambda: _pq_trained(spark, sf_dir, "res", k=_GRID_K)[0].count())
-    stage("sweep_etop", lambda: _etop_staged(spark, sf_dir).count())
-    # staircase PQ-A/B space + guarded truth + the shared baseline arm
-    # (subspace_ab's "contiguous" = opq_ab's "identity" training) —
-    # staged once per session like the PQ indexes; two consumers
-    from data_ingestion_din_spark.plans.similarity_proj import (
-        _pqs_base_trained,
-        _pqs_space,
-    )
-
-    stage(
-        "pqs_space",
-        lambda: _pqs_base_trained(
-            spark, sf_dir, _pqs_space(spark, sf_dir)[0]
-        )[0].count(),
-    )
-    # trained-LM staged artifacts (the _P5/_TRI/_BI convention): the
-    # scored component passes are session-staged and shared by 2-3
-    # consumers each; staging them here prices the build as its own
-    # visible setup row so the consumers' headline entries time the
-    # serve path, not a cold-run build (VERDICT r14 ask #3 — these two
-    # previously staged on first touch inside a query, hiding the build
-    # in an excluded cold run; pqs_space set the honest convention).
-    # The .count() materializes the lazy localCheckpoint (the logical
-    # plan is cut at the checkpoint RDD, so no column pruning skips it).
-    from data_ingestion_din_spark.plans.lm_queries import (
-        _bi_perdoc,
-        _p5_comps,
-        _tri_comps,
-    )
-
-    stage("lm_bi_perdoc", lambda: _bi_perdoc(spark, sf_dir).count())
-    stage("lm_tri_comps", lambda: _tri_comps(spark, sf_dir).count())
-    stage("lm_p5_comps", lambda: _p5_comps(spark, sf_dir).count())
-    # streamed IVFPQ index: the two availableNow landings run once here
-    # so streaming_ivfpq_serve times the read path, not the ingest
-    from data_ingestion_din_spark.plans.streaming_indexes import _siq_out_dir
-
-    stage("ivfpq_stream_index", lambda: _siq_out_dir(spark, sf_dir))
-    # graph-ANN audit tables: the guarded all-pairs kNN build + the
-    # collected walk inputs (one-time audit cost, like sweep_etop)
-    from data_ingestion_din_spark.plans.graph_queries import (
-        _gr_collected,
-    )
-
-    stage("graph_ann_edges", lambda: _gr_collected(spark, sf_dir))
-    # outer-join stream landings (checkpointed availableNow runs) — the
-    # benched row is the readback, the landings are one-time setup like
-    # the ivfpq stream index
-    from data_ingestion_din_spark.plans.streaming_cdc import (
-        _sjf_out_dir,
-        _sjo_out_dir,
-    )
-
-    stage("sjoin_outer_landings", lambda: _sjo_out_dir(spark, sf_dir))
-    stage("sjoin_full_landings", lambda: _sjf_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import _smg_out_dir
-
-    stage("smg_landings", lambda: _smg_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_cdc import _cdcm_out_dir
-
-    stage("cdcm_landings", lambda: _cdcm_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import _sth_out_dir
-
-    stage("sth_landings", lambda: _sth_out_dir(spark, sf_dir))
-    # watermark-lateness grid: nine checkpointed availableNow runs
-    # (3 delays x 3 landings) staged once; the benched row times the
-    # sink readback + per-day rollup
-    from data_ingestion_din_spark.plans.streaming_cdc import _swl_out_dir
-
-    stage("swl_landings", lambda: _swl_out_dir(spark, sf_dir))
-    # the 22 earlier streaming pipelines' landings (availableNow runs +
-    # checkpointed restarts), staged once each so their bench rows time
-    # the repeatable readback plan; every one-time stream cost is its
-    # own recorded setup row (ivfpq_stream_index above already covers
-    # streaming_ivfpq_index / streaming_ivfpq_serve)
-    from data_ingestion_din_spark.plans.streaming_cdc import (
-        _asofs_out_dir,
-        _ddw_out_dir,
-        _first_seen_out_dir,
-        _ingested_corpus_dir,
-        _scd2s_out_dir,
-        _session_windows_out_dir,
-        _snap_out_dir,
-        _stream_join_out_dir,
-    )
-
-    stage("ingest_corpus", lambda: _ingested_corpus_dir(spark, sf_dir))
-    stage("first_seen_landings", lambda: _first_seen_out_dir(spark, sf_dir))
-    stage("stream_join_landings", lambda: _stream_join_out_dir(spark, sf_dir))
-    stage(
-        "session_window_landings",
-        lambda: _session_windows_out_dir(spark, sf_dir),
-    )
-    stage("dedup_watermark_landings", lambda: _ddw_out_dir(spark, sf_dir))
-    stage("scd2_stream_landings", lambda: _scd2s_out_dir(spark, sf_dir))
-    stage("asof_stream_landings", lambda: _asofs_out_dir(spark, sf_dir))
-    stage("snapshot_landings", lambda: _snap_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_gates import (
-        _sbg_out_dir,
-        _scf_out_dir,
-        _sdc_out_dir,
-        _sdg_out_dir,
-        _sqg_out_dir,
-        _ssd_out_dir,
-        _stg_out_dir,
-    )
-
-    stage("curation_funnel_landings", lambda: _scf_out_dir(spark, sf_dir))
-    stage("quality_gate_landings", lambda: _sqg_out_dir(spark, sf_dir))
-    stage("dsir_gate_landings", lambda: _sdg_out_dir(spark, sf_dir))
-    stage("bpe_gate_landings", lambda: _sbg_out_dir(spark, sf_dir))
-    stage("decontam_gate_landings", lambda: _sdc_out_dir(spark, sf_dir))
-    stage("semdedup_gate_landings", lambda: _ssd_out_dir(spark, sf_dir))
-    stage("tmix_gate_landings", lambda: _stg_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_indexes import (
-        _sii_out_dir,
-        _sir_out_dir,
-        _smi_out_dir,
-        _spi_out_dir,
-        _ssi_out_dir,
-    )
-
-    stage("minhash_index_landings", lambda: _smi_out_dir(spark, sf_dir))
-    stage("phash_index_landings", lambda: _spi_out_dir(spark, sf_dir))
-    stage("ivf_index_landings", lambda: _sii_out_dir(spark, sf_dir))
-    stage("ivf_rebalance_landings", lambda: _sir_out_dir(spark, sf_dir))
-    stage("substring_index_landings", lambda: _ssi_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import (
-        _hll_out_dir,
-        _spg_out_dir,
-        _srm_state_dir,
-    )
-
-    stage("hll_registers_landings", lambda: _hll_out_dir(spark, sf_dir))
-    stage("rollup_state_landings", lambda: _srm_state_dir(spark, sf_dir))
-    stage("profile_gate_landings", lambda: _spg_out_dir(spark, sf_dir))
+        for args in calls:
+            force(fn(spark, sf_dir, *args))
+        setup[row] = round(time.time() - t0, 3)
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
@@ -1062,7 +909,6 @@ def main() -> None:
         "setup_total": round(sum(setup.values()), 3),
         "sf": sf,
     }
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     full["cpus"] = cpus
     print(json.dumps(full))
     # Full per-query record also goes to FILES: the driver's log capture
@@ -1085,30 +931,8 @@ def main() -> None:
     # final summary so whatever suffix of stdout survives still contains
     # complete, parseable per-query records (the LAST chunks survive a
     # tail cut; the stamped detail file above is the lossless record).
-    items = sorted(steady.items())
-    chunks: list[dict] = []
-    buf: dict[str, float] = {}
-    for k, v in items:
-        buf[k] = v
-        if len(json.dumps({"queries": buf})) > 1700:
-            chunks.append(buf)
-            buf = {}
-    if buf:
-        chunks.append(buf)
-    for i, ch in enumerate(chunks):
-        print(
-            json.dumps(
-                {
-                    "metric": "per_query_steady",
-                    "part": i + 1,
-                    "parts": len(chunks),
-                    "cpus": cpus,
-                    "sf": sf,
-                    "queries": ch,
-                },
-                separators=(",", ":"),
-            )
-        )
+    for ln in chunk_lines(steady, {"cpus": cpus, "sf": sf}):
+        print(ln)
     # Repeat a compact summary as the FINAL line so the tail always
     # contains one complete JSON record.
     print(

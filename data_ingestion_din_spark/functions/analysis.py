@@ -18,21 +18,11 @@ from pyspark.sql import functions as F
 # sorted so the oracle SQL embeds the identical list.
 STOPWORDS: tuple[str, ...] = ("a", "an", "and", "in", "is", "of", "or", "the", "to")
 
-# BPE-ish token pattern: runs of word chars (latin+Thai) OR single
-# non-space symbol — the regex-token-count analog of a subword tokenizer.
-TOKEN_PATTERN = "[A-Za-z0-9฀-๿]+|[^A-Za-z0-9฀-๿\\s]"
-
 
 def tokens(col: Column) -> Column:
     """Whitespace tokenization with empty-token filtering (portable to the
     oracle: list_filter(string_split(...)))."""
     return F.filter(F.split(col, " "), lambda t: t != "")
-
-
-def regex_token_count(col: Column) -> Column:
-    """Count of TOKEN_PATTERN matches — the 'token count' a BPE-ish
-    tokenizer would report, as a pure regex expression."""
-    return F.size(F.regexp_extract_all(col, F.lit(TOKEN_PATTERN), 0))
 
 
 def bind1(expr: Column, fn) -> Column:

@@ -131,31 +131,3 @@ def seq_ratio(a: Column, b: Column) -> Column:
         )
 
     return _ratio(a, b)
-
-
-def meaningful_text(col: Column, min_chars: int = 2) -> Column:
-    """Predicate F1: at least ``min_chars`` word characters (latin digits
-    letters or Thai) — ingestion/pdf_parser.py:71,81-85 and variants."""
-    return (
-        F.length(F.regexp_replace(col, "[^A-Za-z0-9฀-๿]", ""))
-        >= min_chars
-    )
-
-
-# F9 — general-intent guard (backend/services/rag.py:218-227): exact
-# membership in the chit-chat keyword set plus the "what day is today"
-# conjunction; used to short-circuit retrieval before any scan runs.
-GENERAL_INTENT_KEYWORDS = [
-    "สวัสดี", "hello", "hi", "วันนี้วันอะไร", "อากาศ",
-    "who are you", "คุณคือใคร", "สบายดีไหม",
-]
-
-
-def is_general_intent(col: Column) -> Column:
-    """True when the query is general chit-chat, not a document question
-    — the reference's exact semantics: lowercase+trim then whole-string
-    keyword membership, or the วันนี้ + วันอะไร date-question pair."""
-    q = F.lower(F.trim(col))
-    return q.isin(GENERAL_INTENT_KEYWORDS) | (
-        q.contains("วันนี้") & q.contains("วันอะไร")
-    )

@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestion_din_spark.staging import staged
 
 
 def write_bucketed(
@@ -56,122 +57,26 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-# A sibling dir younger than this is treated as potentially LIVE and
-# never deleted: sessions here run minutes-to-hours, so 6 h of slack
-# protects every concurrent bench/pytest/verify combination while still
-# bounding cross-day disk growth.
-STALE_AGE_SEC = 6 * 3600
-
-
-def cleanup_stale_app_dirs(
-    root: str, keep: str, max_age_sec: float = STALE_AGE_SEC
-) -> None:
-    """Delete per-application artifact directories under ``root`` left by
-    PREVIOUS Spark applications (``keep`` is the current applicationId's
-    sanitized dir name). Session-scoped staging otherwise accumulates
-    unboundedly across sessions. Called on first staging use per session.
-
-    Deletion is AGE-GATED: a sibling dir is removed only when its mtime
-    is older than ``max_age_sec`` — a fresh dir belongs to a concurrently
-    LIVE session whose in-memory staging caches still point at it, and
-    deleting it would break that session for its remaining lifetime (the
-    round-4 reproduced race). As a second line of defense every staging
-    materializer also re-checks its directory on cache hit and
-    re-materializes if it vanished (:func:`_dir_ok`)."""
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    now = time.time()
-    for d in entries:
-        if d == keep:
-            continue
-        p = os.path.join(root, d)
-        try:
-            if now - os.path.getmtime(p) <= max_age_sec:
-                continue
-        except OSError:
-            continue  # raced away already
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _dir_ok(path: str) -> bool:
-    """True when a staged artifact directory still exists and is
-    non-empty — the cache-hit revalidation guard: an in-memory staging
-    cache entry whose files were deleted externally (stale-dir cleanup
-    by an aggressive sibling, manual tmp wipe) must trigger
-    re-materialization, not a FileNotFoundException mid-query."""
-    try:
-        return bool(os.listdir(path))
-    except OSError:
-        return False
-
-
-def app_dir_path(spark: SparkSession, sf_dir: str, root_name: str) -> str:
-    """Pure path derivation for an app-scoped staged artifact —
-    ``$TMPDIR/<root_name>/<sanitized app id>/<sanitized sf tag>`` — with
-    NO filesystem side effects. Cache-hit revalidation paths must use
-    this (not a hand-rolled re.sub copy) so a layout change here cannot
-    leave a cache checking the old location while :func:`fresh_app_dir`
-    materializes to the new one."""
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    return os.path.join(tempfile.gettempdir(), root_name, app, tag)
-
-
-def fresh_app_dir(spark: SparkSession, sf_dir: str, root_name: str) -> str:
-    """App-scoped staged-artifact base dir (:func:`app_dir_path`) with
-    the staging lifecycle applied — stale sibling-app dirs under the
-    root cleaned (age-gated), the base itself recreated empty. The one
-    place the scaffold lives: the streaming landings, the shard export
-    and any future staged artifact call this instead of repeating the
-    sanitize/cleanup/rmtree block (a lifecycle fix lands once)."""
-    import shutil
-
-    base = app_dir_path(spark, sf_dir, root_name)
-    root, app = os.path.dirname(os.path.dirname(base)), os.path.basename(
-        os.path.dirname(base)
-    )
-    cleanup_stale_app_dirs(root, app)
-    shutil.rmtree(base, ignore_errors=True)
-    return base
-
-
-# Layout staging cache, keyed like sources/entities._ENTITY_CACHE: the
-# applicationId is unique per SparkContext lifetime (id(spark) is not —
-# a stopped session's address can be reused).
-_BUCKETED_FACTS: set[tuple[str, str, int]] = set()
-
 N_FACT_BUCKETS = 8
 
 
+@staged("bucketed_fact_tables", kind="dir")
 def bucketed_fact_tables(
-    spark: SparkSession, sf_dir: str, n_buckets: int = N_FACT_BUCKETS
+    spark: SparkSession, sf_dir: str, base: str
 ) -> tuple[str, str]:
     """Materialize ``orders`` and ``lineitem`` bucketed+sorted on the
-    orderkey, once per (session, sf_dir); returns the two table names.
+    orderkey (``N_FACT_BUCKETS`` buckets), once per (session, sf_dir);
+    returns the two table names.
 
     This is the layout a nightly fact-fact pipeline pays for ONCE so that
     every subsequent orderkey join/aggregation plans with zero shuffle
     Exchange (see ``q3_bucketed_colocated``). External parquet tables
-    under the system temp dir, tagged by applicationId — re-registration
-    is idempotent within a session and cannot collide across sessions."""
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed")
-    base = os.path.join(root, app, tag)
-    if cache_key in _BUCKETED_FACTS:
-        if all(_dir_ok(os.path.join(base, t)) for t in names):
-            return names
-        _BUCKETED_FACTS.discard(cache_key)  # staged files vanished
+    under the staged base dir — re-registration is idempotent within a
+    session and cannot collide across sessions."""
     from data_ingestion_din_spark.sources.tables import load_table
 
-    cleanup_stale_app_dirs(root, app)
+    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
+    names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
     for src, tbl, key in (
         ("orders", names[0], "o_orderkey"),
         ("lineitem", names[1], "l_orderkey"),
@@ -181,10 +86,9 @@ def bucketed_fact_tables(
             load_table(spark, sf_dir, src),
             tbl,
             key,
-            n_buckets,
+            N_FACT_BUCKETS,
             path=os.path.join(base, tbl),
         )
-    _BUCKETED_FACTS.add(cache_key)
     return names
 
 
@@ -261,10 +165,8 @@ def salted_join(
 # Partition-pruned corpus layout: the scan-layout lever next to
 # bucketing. Written once per (application, sf_dir), like the bucketed
 # facts above.
-_PARTITIONED_DOCS: dict[tuple[str, str], str] = {}
-
-
-def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
+@staged("partitioned_documents", kind="dir")
+def partitioned_documents(spark: SparkSession, sf_dir: str, base: str) -> str:
     """Materialize the ``documents`` table partitioned by ``lang``
     (hive-style ``lang=xx/`` directories) once per session; returns the
     path. A language-filtered query over this layout prunes at FILE
@@ -273,26 +175,15 @@ def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
     (plan-asserted in tests/test_colocate.py). At 100 TB this is the
     difference between reading one language's share and reading the
     whole corpus to filter it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PARTITIONED_DOCS:
-        if _dir_ok(_PARTITIONED_DOCS[key]):
-            return _PARTITIONED_DOCS[key]
-        del _PARTITIONED_DOCS[key]  # staged files vanished
     from data_ingestion_din_spark.sources.tables import load_table
 
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_partdocs")
-    cleanup_stale_app_dirs(root, app)
-    path = os.path.join(root, app, tag)
     (
         load_table(spark, sf_dir, "documents")
         .write.mode("overwrite")
         .partitionBy("lang")
-        .parquet(path)
+        .parquet(base)
     )
-    _PARTITIONED_DOCS[key] = path
-    return path
+    return base
 
 
 # Z-order (Morton-curve) clustered layout: the third layout lever next
@@ -301,7 +192,6 @@ def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
 # and row-group min/max ranges tight BOXES in (user, time) space, so a
 # 2-D box predicate skips most files on BOTH dimensions — a time-sorted
 # layout prunes time ranges but every file spans the full user range.
-_ZORDER_EVENTS: dict[tuple[str, str], str] = {}
 
 _Z_FILES = 16
 
@@ -324,7 +214,8 @@ def zorder_value(dim_a: str, dim_b: str) -> Column:
     )
 
 
-def zordered_events(spark: SparkSession, sf_dir: str) -> str:
+@staged("zordered_events", kind="dir")
+def zordered_events(spark: SparkSession, sf_dir: str, base: str) -> str:
     """Materialize ``events`` z-ordered on (user_id, ts) into
     ``_Z_FILES`` range-partitioned, z-sorted parquet files, once per
     (session, sf_dir); returns the path. Dimensions are min-max scaled
@@ -334,18 +225,8 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> str:
     what lets a box predicate skip files on both dimensions
     (tests/test_colocate.py reads the parquet footers and proves the
     skip rate vs a time-sorted layout)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ZORDER_EVENTS:
-        if _dir_ok(_ZORDER_EVENTS[key]):
-            return _ZORDER_EVENTS[key]
-        del _ZORDER_EVENTS[key]
     from data_ingestion_din_spark.sources.tables import load_table
 
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_zorder")
-    cleanup_stale_app_dirs(root, app)
-    path = os.path.join(root, app, tag)
     ev = load_table(spark, sf_dir, "events")
     lo_u, hi_u, lo_t, hi_t = ev.select(
         F.min("user_id"),
@@ -377,10 +258,9 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> str:
         .drop("_z")
         .write.mode("overwrite")
         .partitionBy("_zcell")
-        .parquet(path)
+        .parquet(base)
     )
-    _ZORDER_EVENTS[key] = path
-    return path
+    return base
 
 
 def _parquet_files(path: str) -> list[tuple[str, int]]:
@@ -429,21 +309,3 @@ def compact_small_files(
         "files_after": len(after),
         "bytes_after": sum(sz for _, sz in after),
     }
-
-
-def session_staged(cache: dict, spark, sf_dir: str, build):
-    """The one (applicationId, sf_dir)-keyed session-staging pattern:
-    evict entries from other (stopped) SparkContexts — their
-    checkpointed blocks died with the JVM, and keeping the dead
-    references would grow the dict unboundedly across session restarts
-    in one process (review finding) — then build + eagerly
-    localCheckpoint on miss. ``build()`` returns the DataFrame to
-    stage; used by the pHash table, the banded-pair table, the
-    substring-span table and the trained k-means assignment."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
-    key = (app, sf_dir)
-    if key not in cache:
-        cache[key] = build().localCheckpoint(eager=True)
-    return cache[key]

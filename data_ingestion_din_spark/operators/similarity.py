@@ -184,22 +184,6 @@ def lsh_bucket(
     return emb.withColumn("bucket", guarded)
 
 
-def lsh_topk(emb: DataFrame, qvec: Column, k: int = 10, n_planes: int = 8) -> DataFrame:
-    """ANN search: hash query + corpus with the same planes, scan only the
-    query's bucket, exact re-rank inside it. Recall rises with fewer
-    planes / multiple tables; this single-table form is the scale skeleton."""
-    hashed = lsh_bucket(emb, n_planes)
-    qdf = hashed.sparkSession.range(1).select(qvec.alias("embedding"))
-    qbucket = lsh_bucket(qdf, n_planes).select("bucket")
-    return (
-        hashed.join(F.broadcast(qbucket), "bucket")
-        .withColumn("cos_sim", cosine(F.col("embedding"), qvec))
-        .select("vec_id", "label", "cos_sim")
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
 def assign_to_centroids(qv_df: DataFrame, cents: list[list[int]]) -> DataFrame:
     """Assign quantized vectors (vec_id, qv) to the nearest centroid of a
     FROZEN k×dims integer centroid matrix (argmin of integer squared

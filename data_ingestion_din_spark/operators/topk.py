@@ -3,8 +3,6 @@
 Global top-k uses ``orderBy().limit(k)`` — Spark plans this as
 TakeOrderedAndProject: each task keeps a k-row heap, the driver merges.
 No full sort, no wide shuffle; survives any scale-up.
-
-Grouped top-k uses a row_number window ≤ k — one shuffle on the group key.
 """
 
 from __future__ import annotations
@@ -12,8 +10,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 
 def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
@@ -21,16 +17,3 @@ def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     deterministic results (SURVEY.md §7.4.2)."""
     return df.orderBy(*order).limit(k)
 
-
-def grouped_topk(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order: Sequence[Column],
-    k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    w = W.partitionBy(*group_cols).orderBy(*order)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )

@@ -16,6 +16,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS`` if set, else the host's
+    core count. A non-integer or < 1 value raises before any session
+    starts, instead of surfacing as a JVM error or late in a run."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 8
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return cpus
+
+
 def get_spark(
     app_name: str = "data_ingestion_din_spark",
     master: str | None = None,
@@ -24,9 +42,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism and the
-    default shuffle-partition count.
+    default shuffle-partition count (see :func:`graft_cpus`).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = graft_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
 from data_ingestion_din_spark.sources.tables import load_table, scan_parallel
+from data_ingestion_din_spark.staging import staged
 
 # --------------------------------------------------------------------------
 # text_blocks
@@ -50,9 +51,7 @@ def text_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     id, doc_id, page, content, bbox, font_size, intent) — staged via the
     entity cache like ``table_blocks`` (one md5-heavy derivation per
     (app, sf_dir), then every consumer reads the materialized table)."""
-    return _cached(
-        spark, sf_dir, "text_blocks", lambda: _text_blocks(spark, sf_dir)
-    )
+    return _cached(spark, sf_dir, "text_blocks")
 
 
 def _text_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,24 +262,20 @@ def _cell_sql(ch: str) -> str:
 # inline the whole tree per reference (exponential analysis time).
 # localCheckpoint materializes the derived entity once and truncates the
 # lineage — the production shape too (entities are a staged table).
-_ENTITY_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    # Keyed on applicationId (unique per SparkContext lifetime), not
-    # id(spark): a stopped session's address can be reused by a new one,
-    # which would resurrect a checkpointed DataFrame bound to a dead context.
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _ENTITY_CACHE:
-        _ENTITY_CACHE[key] = build().localCheckpoint(eager=True)
-    return _ENTITY_CACHE[key]
+@staged(
+    "entity_tables",
+    rows={"entity_tables": [("text_blocks",), ("table_blocks",)]},
+)
+def _cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    build = {"text_blocks": _text_blocks, "table_blocks": _table_blocks}[name]
+    return build(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def table_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the ``table_blocks`` entity table (FIXTURES.md B.2 subset:
     id, doc_id, page, columns, rows, source, numeric_trust,
     source_priority). Materialized once per (session, sf_dir)."""
-    return _cached(spark, sf_dir, "table_blocks", lambda: _table_blocks(spark, sf_dir))
+    return _cached(spark, sf_dir, "table_blocks")
 
 
 def _table_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:

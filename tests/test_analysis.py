@@ -8,7 +8,6 @@ from data_ingestion_din_spark.functions.analysis import (
     fingerprint,
     lang_id,
     quality_score,
-    regex_token_count,
     tokens,
     word_shingles,
 )
@@ -21,12 +20,6 @@ def test_tokens_and_shingles(spark):
     assert [r.t for r in toks.collect()] == [["a", "b", "c", "d"], ["x"], []]
     sh = df.select(word_shingles(tokens(F.col("x")), 3).alias("s"))
     assert [r.s for r in sh.collect()] == [["a b c", "b c d"], [], []]
-
-
-def test_regex_token_count(spark):
-    df = spark.createDataFrame([("hello, world! ไทย 42",)], ["x"])
-    # tokens: hello , world ! ไทย 42  → 6
-    assert df.select(regex_token_count(F.col("x"))).collect()[0][0] == 6
 
 
 def test_lang_id(spark):

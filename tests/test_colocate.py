@@ -228,9 +228,7 @@ def test_cleanup_age_gate_spares_live_dirs(tmp_path):
     session)."""
     import os
 
-    from data_ingestion_din_spark.operators.colocate import (
-        cleanup_stale_app_dirs,
-    )
+    from data_ingestion_din_spark.staging import cleanup_stale_app_dirs
 
     root = str(tmp_path)
     for name in ("app_current", "app_live", "app_stale"):
@@ -288,16 +286,17 @@ def test_staging_growth_bounded_across_sessions(spark, tmp_path,
     import os
     import tempfile as _tf
 
+    from data_ingestion_din_spark import staging
     from data_ingestion_din_spark.operators import colocate
 
     monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
-    root = os.path.join(str(tmp_path), "spark_graft_bucketed")
+    root = os.path.join(str(tmp_path), "spark_graft_bucketed_fact_tables")
     # fake remnant of a long-dead session
     dead = os.path.join(root, "app_dead_session", "sf")
     os.makedirs(dead)
     os.utime(os.path.dirname(dead), (1, 1))
     os.utime(dead, (1, 1))
-    colocate._BUCKETED_FACTS.clear()
+    staging.reset("bucketed_fact_tables")
     try:
         colocate.bucketed_fact_tables(spark, SF)
         apps = sorted(os.listdir(root))
@@ -307,7 +306,7 @@ def test_staging_growth_bounded_across_sessions(spark, tmp_path,
         # restore real-tempdir staging so later tests' cache hits don't
         # point at pytest's transient tmp_path
         monkeypatch.undo()
-        colocate._BUCKETED_FACTS.clear()
+        staging.reset("bucketed_fact_tables")
         colocate.bucketed_fact_tables(spark, SF)
 
 

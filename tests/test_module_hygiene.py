@@ -10,9 +10,11 @@ failure impossible to reintroduce:
 
 1. No module-level name in any plans/operators/functions/sources module
    is defined twice (def/class/assignment shadowing).
-2. Every ``fresh_app_dir``/``app_dir_path`` staged-directory tag belongs
-   to exactly one top-level function package-wide (two families sharing a
-   tag would overwrite each other's session-staged artifacts).
+2. Only ``staging.py`` reads ``applicationId``: every session-staged
+   artifact goes through its ``@staged`` registry, whose unique names
+   give each artifact its own staged directory (two families sharing one
+   would overwrite each other's artifacts), so no module hand-rolls a
+   memo keyed on the application.
 """
 
 from __future__ import annotations
@@ -60,27 +62,25 @@ def test_no_module_level_name_shadowing():
     )
 
 
-def test_staged_dir_tags_unique_per_function():
-    tag_sites: dict[str, set[tuple[str, str]]] = collections.defaultdict(set)
+def test_application_id_only_in_staging():
+    readers = collections.defaultdict(list)
     for path in _module_files():
         with open(path) as fh:
             tree = ast.parse(fh.read())
-        rel = os.path.relpath(path, PKG)
-        for fn in (n for n in tree.body if isinstance(n, ast.FunctionDef)):
-            for node in ast.walk(fn):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Name)
-                    and node.func.id in ("fresh_app_dir", "app_dir_path")
-                    and len(node.args) >= 3
-                    and isinstance(node.args[2], ast.Constant)
-                ):
-                    tag_sites[node.args[2].value].add((rel, fn.name))
-    assert tag_sites, "no staged-dir tags found — scan is miswired"
-    shared = {t: sorted(s) for t, s in tag_sites.items() if len(s) > 1}
-    assert not shared, (
-        "staged-dir tags used by more than one top-level function "
-        f"(families would clobber each other's artifacts): {shared}"
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "applicationId"
+            ) or (
+                isinstance(node, ast.Constant)
+                and node.value == "applicationId"
+            ):
+                readers[os.path.relpath(path, PKG)].append(node.lineno)
+    assert "staging.py" in readers, "no applicationId read — scan is miswired"
+    others = {p: ln for p, ln in readers.items() if p != "staging.py"}
+    assert not others, (
+        "applicationId read outside staging.py — declare the artifact "
+        f"with @staged instead of a hand-rolled memo: {others}"
     )
 
 

@@ -14,9 +14,8 @@ from data_ingestion_din_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
     lsh_bucket,
-    lsh_topk,
 )
-from data_ingestion_din_spark.operators.topk import grouped_topk, topk
+from data_ingestion_din_spark.operators.topk import topk
 
 
 def _ts(minute):
@@ -52,7 +51,7 @@ def test_assign_groups_break_on_value_change(spark):
     assert [r.group_id for r in out.orderBy("pos").collect()] == [1, 1, 2, 3]
 
 
-def test_topk_and_grouped_topk(spark):
+def test_topk(spark):
     df = spark.createDataFrame(
         [(g, i, float(v)) for g, i, v in
          [(1, 1, 5), (1, 2, 9), (1, 3, 9), (2, 4, 1), (2, 5, 3)]],
@@ -60,8 +59,6 @@ def test_topk_and_grouped_topk(spark):
     )
     top = topk(df, [F.desc("v"), F.asc("id")], 2).collect()
     assert [(r.g, r.id) for r in top] == [(1, 2), (1, 3)]
-    g = grouped_topk(df, ["g"], [F.desc("v"), F.asc("id")], 1)
-    assert {(r.g, r.id) for r in g.collect()} == {(1, 2), (2, 5)}
 
 
 def _emb_df(spark):
@@ -90,7 +87,7 @@ def test_ivf_topk_prunes_partition(spark):
     assert got == [1, 3, 5]  # odd ids only (label==1), by angle
 
 
-def test_lsh_bucket_deterministic_and_topk_recall(spark):
+def test_lsh_bucket_deterministic(spark):
     emb = _emb_df(spark)
     b1 = {r.vec_id: r.bucket for r in lsh_bucket(emb).collect()}
     b2 = {r.vec_id: r.bucket for r in lsh_bucket(emb).collect()}
@@ -99,9 +96,6 @@ def test_lsh_bucket_deterministic_and_topk_recall(spark):
     # coefficients (null-safe pad), not degenerate into one bucket
     assert len(set(b1.values())) > 1
     assert all(b is not None for b in b1.values())
-    q = F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))
-    got = [r.vec_id for r in lsh_topk(emb, q, k=3, n_planes=4).collect()]
-    assert got and got[0] == 0  # nearest vector shares the query's bucket
 
 
 def test_operators_tolerate_empty_input(spark):

@@ -1,4 +1,4 @@
-"""K7 eval-report sink + F9 general-intent guard."""
+"""K7 eval-report sink."""
 
 from __future__ import annotations
 
@@ -6,9 +6,6 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import functions as F
-
-from data_ingestion_din_spark.functions.text import is_general_intent
 from data_ingestion_din_spark.sinks.report import eval_summary, write_eval_report
 
 SCHEMA = (
@@ -44,22 +41,6 @@ def test_write_eval_report_files(spark):
     assert loaded["levels"]["Easy"]["n"] == 2
     html = open(os.path.join(d, "report.html")).read()
     assert "65.00% (Fair)" in html and "q4" in html
-
-
-def test_is_general_intent(spark):
-    rows = [
-        ("hello", True),
-        ("  Hi ", True),
-        ("สวัสดี", True),
-        ("วันนี้วันอะไรครับ", True),   # conjunction rule
-        ("what is the revenue in 1996", False),
-        ("hello there, what is q3 revenue", False),  # not exact member
-    ]
-    df = spark.createDataFrame([(q,) for q, _ in rows], "q string")
-    got = [
-        r.g for r in df.select(is_general_intent(F.col("q")).alias("g")).collect()
-    ]
-    assert got == [e for _, e in rows]
 
 
 def test_write_eval_report_empty_input(spark):

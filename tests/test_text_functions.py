@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.text import (
     clean_text,
-    meaningful_text,
     normalize_section_title,
     parse_money,
     sanitize_doc_id,
@@ -105,12 +104,6 @@ def test_parse_money(spark):
         -250.75,
         None,
     ]
-
-
-def test_meaningful_text(spark):
-    # F1 predicate: ≥2 word chars incl. Thai (ingestion/pdf_parser.py:71).
-    out = _apply(spark, lambda c: meaningful_text(c, 2), ["ab", "a", "--", "ไทย", "a-b"])
-    assert out == [True, False, False, True, True]
 
 
 # --------------------------------------------------------------------------
